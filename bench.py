@@ -71,6 +71,8 @@ def main() -> None:
     sf = float(sf_dir.rstrip("/").split("sf")[-1]) if "sf" in sf_dir else -1.0
 
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
+    if reps < 1:
+        raise ValueError(f"SPARK_GRAFT_BENCH_REPS must be >= 1, got {reps}")
     spark = get_spark(app_name="tc-bench", cores=cpus, shuffle_partitions=cpus)
     jobs: list[tuple[str, object]] = []
     all_reps: dict[str, list[float]] = {}
@@ -187,10 +189,12 @@ def main() -> None:
 
     from trianglecount_spark.functions.extract import edges_from_pages
     from trianglecount_spark.operators.canonicalize import (
+        canonicalize_edges,
         canonicalize_edges_packed,
         orient,
     )
     from trianglecount_spark.plans.queries import web_pages_from_documents
+    from trianglecount_spark.plans.regimes import fits_31_bits
 
     def run_web():
         # arrays strategy — the measured-fastest TC form at every
@@ -202,13 +206,17 @@ def main() -> None:
         # canonicalize distinct re-execute 2-4x through unpersisted
         # lineage, timing recomputation instead of the pipeline.
         handles = []
-        we, _ = edges_from_pages(
+        we, verts = edges_from_pages(
             web_pages_from_documents(spark, sf_dir), handles=handles
         )
-        # packed-key canonicalize: legal because dictionary vids are
-        # dense from 0 and far below 2^31 here (plans/pipeline.py
-        # gates on the vertex count at crawl scale)
-        sym_w = canonicalize_edges_packed(we).persist()
+        # packed-key canonicalize while the dense dictionary vids fit
+        # 31 bits — the same gate as plans/pipeline.py
+        canon = (
+            canonicalize_edges_packed
+            if fits_31_bits(verts.count() - 1)
+            else canonicalize_edges
+        )
+        sym_w = canon(we).persist()
         sym_w.count()
         ori_w = orient(sym_w).persist()
         ori_w.count()

@@ -649,6 +649,7 @@ def test_pair_counts_auto_regime_selection(spark, monkeypatch):
     regime bounds hold — hub cap set AND capped adjacency under the
     byte ceiling — and the all-shuffle plan otherwise."""
     import trianglecount_spark.operators.metrics as M
+    from trianglecount_spark.plans import regimes as R
 
     sym = _sym(
         spark,
@@ -665,8 +666,8 @@ def test_pair_counts_auto_regime_selection(spark, monkeypatch):
     shuf = M.link_prediction_jaccard(sym, min_common=1)
     assert "MapInArrow" not in plan(shuf)
     # capped but past the size ceiling: bound (1) fails -> shuffle form
-    monkeypatch.setattr(M, "_KERNEL_BYTE_LIMIT", 1)
-    monkeypatch.setattr(M, "_KERNEL_ROW_LIMIT", 1)
+    monkeypatch.setattr(R, "BROADCAST_BYTE_LIMIT", 1)
+    monkeypatch.setattr(R, "BROADCAST_ROW_LIMIT", 1)
     big = M.link_prediction_jaccard(sym, min_common=1, max_center_degree=8)
     assert "MapInArrow" not in plan(big)
     monkeypatch.undo()
@@ -701,14 +702,15 @@ def test_frontier_auto_resolves_by_size(spark, monkeypatch):
     edge-table size estimate exceeds the ceiling, with identical
     results either way."""
     import trianglecount_spark.operators.metrics as M
+    from trianglecount_spark.plans import regimes as R
 
     sym = _sym(spark, [(0, 1), (1, 2), (2, 3), (0, 3), (1, 4)])
-    assert M._resolve_broadcast_state("auto", sym) is True  # noqa: SLF001
-    assert M._resolve_broadcast_state(True, sym) is True  # noqa: SLF001
-    assert M._resolve_broadcast_state(False, sym) is False  # noqa: SLF001
-    monkeypatch.setattr(M, "_KERNEL_BYTE_LIMIT", 1)
-    monkeypatch.setattr(M, "_KERNEL_ROW_LIMIT", 1)
-    assert M._resolve_broadcast_state("auto", sym) is False  # noqa: SLF001
+    assert R.resolve_broadcast_state("auto", sym) is True
+    assert R.resolve_broadcast_state(True, sym) is True
+    assert R.resolve_broadcast_state(False, sym) is False
+    monkeypatch.setattr(R, "BROADCAST_BYTE_LIMIT", 1)
+    monkeypatch.setattr(R, "BROADCAST_ROW_LIMIT", 1)
+    assert R.resolve_broadcast_state("auto", sym) is False
     # end-to-end under the shrunken ceiling: auto now runs the shuffle
     # regime and must agree with the explicit broadcast run
     d_auto, _ = M.bfs_distances(sym, 0, max_rounds=6)
@@ -728,10 +730,11 @@ def test_broadcast_tristate_typo_raises(spark):
     import trianglecount_spark.operators.metrics as M
     from trianglecount_spark.operators.lpa import label_propagation
     from trianglecount_spark.operators.pagerank import pagerank
+    from trianglecount_spark.plans import regimes as R
 
     sym = _sym(spark, [(0, 1), (1, 2), (0, 2), (2, 3)])
     with pytest.raises(ValueError, match="auto"):
-        M._resolve_broadcast_state("Auto", sym)  # noqa: SLF001
+        R.resolve_broadcast_state("Auto", sym)
     with pytest.raises(ValueError, match="auto"):
         M.link_prediction_jaccard(
             sym, min_common=1, max_center_degree=8, broadcast_adjacency="none"
@@ -750,7 +753,7 @@ def test_estimated_bytes_file_scan_deser_factor(spark, tmp_path):
     the deserialization factor before any broadcast-ceiling comparison,
     while accurate non-scan stats (Range/InMemory/Local leaves) pass
     through unadjusted."""
-    from trianglecount_spark.operators.triangles import (
+    from trianglecount_spark.plans.regimes import (
         _FILE_SCAN_DESER_FACTOR,
         _estimated_bytes,
     )

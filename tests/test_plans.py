@@ -8,7 +8,7 @@ keeps exactly one applyInPandas exchange.
 
 from __future__ import annotations
 
-from trianglecount_spark.plans.queries import copurchase_oriented, q_triangle_total
+from trianglecount_spark.plans.queries import copurchase_oriented
 
 SF = "/root/testdata/sf0.001"
 
@@ -35,7 +35,9 @@ def test_copurchase_scan_prunes_columns(spark):
 
 
 def test_triangle_plan_uses_hash_joins(spark):
-    plan = _plan(q_triangle_total(spark, SF))
+    from trianglecount_spark.operators.triangles import triangles_join
+
+    plan = _plan(triangles_join(copurchase_oriented(spark, SF)))
     # the closure must be a semi join, never a nested loop
     assert "LeftSemi" in plan
     assert "BroadcastNestedLoopJoin" not in plan

@@ -169,6 +169,12 @@ def pair_table(lo: int, hi: int, results: dict) -> tuple[list[str], dict]:
         cells = results.get(q, {})
         if lo not in cells or hi not in cells:
             continue  # partial cache / subset rerun: skip, don't crash
+        h_lo, h_hi = cells[lo].get("harness"), cells[hi].get("harness")
+        if h_lo != h_hi:
+            # a single-level rerun after a protocol bump: the two cells
+            # measure different protocols, so no efficiency is computed
+            lines.append(f"| {q} | harness v{h_lo} | harness v{h_hi} | — | not paired |")
+            continue
         t_lo = cells[lo]["seconds"]
         t_hi = cells[hi]["seconds"]
         sp = t_lo / t_hi

@@ -105,8 +105,10 @@ DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
 # webe2esh 2->8 eff 0.772 (v10) -> 0.805 (v11), hi level 68.2->65.9 s,
 # lo level unchanged within noise — the gain lands where per-core
 # bandwidth is diluted, consistent with the piecewise probe's story.
+# v12 (webe2e/webe2esh) = the packed-canon gate counts the url
+# dictionary inside the timed region (plans/regimes.fits_31_bits).
 _DEFAULT_HARNESS = 6
-HARNESS_VERSIONS = {"tc_kernel": 7, "linkpred": 7, "webe2e": 11, "webe2esh": 11}
+HARNESS_VERSIONS = {"tc_kernel": 7, "linkpred": 7, "webe2e": 12, "webe2esh": 12}
 HARNESS_VERSION = _DEFAULT_HARNESS  # imported by tools/scaling.py
 
 
@@ -177,7 +179,7 @@ def main() -> None:
             # shuffle closure: the all-shuffle plan is the form whose
             # scaling the two-cluster criterion constrains (broadcast
             # build is a serial driver-side step)
-            out["n_triangles"] = triangles_join(oriented, closure="shuffle").count()
+            out["n_triangles"] = triangles_join(oriented, closure=False).count()
         elif job == "tc_kernel":
             # n_parts = the shuffle-partition count: halo arrays replicate
             # once per demanding group, so finer groups multiply shuffle
@@ -222,18 +224,17 @@ def main() -> None:
             from trianglecount_spark.operators.canonicalize import (
                 canonicalize_edges_packed,
             )
-
-            # packed-key canonicalize is the v11 default (measured win,
-            # see HARNESS_VERSIONS); SPARK_GRAFT_PACKED_CANON=0 re-runs
-            # the v10 unpacked A/B arm without a code flip
-            canon = (
-                canonicalize_edges
-                if os.environ.get("SPARK_GRAFT_PACKED_CANON") == "0"
-                else canonicalize_edges_packed
-            )
+            from trianglecount_spark.plans.regimes import fits_31_bits
 
             handles: list = []
-            we, _verts = edges_from_pages(pages, handles=handles)
+            we, verts = edges_from_pages(pages, handles=handles)
+            # packed-key canonicalize (v11, see HARNESS_VERSIONS) while
+            # the dense dictionary vids fit 31 bits — the pipeline's gate
+            canon = (
+                canonicalize_edges_packed
+                if fits_31_bits(verts.count() - 1)
+                else canonicalize_edges
+            )
             # materialize each stage artifact once, exactly like the
             # resumable pipeline job (plans/pipeline.py): orient
             # references sym twice (degree agg + join) and the arrays

@@ -54,8 +54,11 @@ def canonicalize_edges_packed(
 
     REQUIRES ``0 <= id < 2^31`` for both endpoints — the contract of
     dictionary-mapped vids (``vertex_dictionary_scalable`` ranks are
-    dense from 0; the kernel applies the same int32 downcast,
-    triangles.py). Callers with arbitrary ids use the unpacked form.
+    dense from 0). Callers gate on ``plans.regimes.fits_31_bits`` and
+    use the unpacked form otherwise.
+
+    The output columns are always LONG, whatever the input type; the
+    unpacked form keeps the input's column types.
     """
     # cast to long BEFORE shifting: on an int-typed column Java's shift
     # semantics wrap the shift count mod 32, so shiftleft(int, 32) would

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from trianglecount_spark.operators.iterative import IterationLog, iterate
+from trianglecount_spark.plans.regimes import resolve_broadcast_state
 
 
 def label_propagation(
@@ -48,9 +49,7 @@ def label_propagation(
     # unconditional routing: the resolver passes True/False through,
     # probes on "auto", and REJECTS anything else (typo-safety — a
     # truthy string must not silently force the broadcast regime)
-    from trianglecount_spark.operators.metrics import _resolve_broadcast_state
-
-    broadcast_state = _resolve_broadcast_state(broadcast_state, edges)
+    broadcast_state = resolve_broadcast_state(broadcast_state, edges)
     pin = F.broadcast if broadcast_state else (lambda df: df)
     sym = (
         edges.select("src", "dst")

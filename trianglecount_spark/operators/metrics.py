@@ -31,56 +31,11 @@ from pyspark.sql import functions as F
 
 from trianglecount_spark.operators.canonicalize import degrees, orient
 from trianglecount_spark.operators.iterative import IterationLog, iterate
-from trianglecount_spark.operators.triangles import (
-    _BROADCAST_BYTE_LIMIT,
-    _BROADCAST_EDGE_LIMIT,
-    _estimated_bytes,
-    triangles_join,
+from trianglecount_spark.operators.triangles import triangles_join
+from trianglecount_spark.plans.regimes import (
+    resolve_broadcast_adjacency,
+    resolve_broadcast_state,
 )
-
-# Byte/row ceilings for choosing a broadcast/kernel regime (the same
-# probe-and-threshold pattern as triangles_join(closure="auto")).
-# Module-local aliases so tests can shrink them to force the shuffle
-# regime on a small fixture.
-_KERNEL_BYTE_LIMIT = _BROADCAST_BYTE_LIMIT
-_KERNEL_ROW_LIMIT = _BROADCAST_EDGE_LIMIT
-
-
-def _resolve_broadcast_state(flag: bool | str, proxy: DataFrame) -> bool:
-    """Resolve a ``broadcast_state``/``broadcast_adjacency`` tri-state:
-    ``True``/``False`` pass through (explicit override); ``"auto"``
-    broadcasts iff ``proxy`` fits the regime ceiling. Callers pass the
-    EDGE table as the proxy for vertex-sized state (a sound upper
-    bound: the state never exceeds one row per edge endpoint), so an
-    oversized input degrades to the always-correct shuffle regime
-    instead of failing at the broadcast.
-
-    Probe order: Catalyst's optimized-plan size estimate first (a JVM
-    stats call, no job) — trusted when it ALLOWS the broadcast, because
-    without CBO table stats Catalyst only ever overestimates join
-    lineage (measured 55 GB claimed for a 4 MB self-join projection),
-    so a small estimate is reliable. An unknown or over-ceiling
-    estimate is settled by one ``count()`` against the row ceiling —
-    a map-side partial agg over the proxy, noise next to either regime
-    it guards. File-scan estimates carry a deserialization factor
-    (``triangles._FILE_SCAN_DESER_FACTOR``): parquet's sizeInBytes is
-    the compressed footprint, 3-10x under the broadcast size (r4
-    advisor) — so near-ceiling scans settle by count, not estimate.
-
-    The tri-state is VALIDATED: anything but True/False/"auto" raises —
-    a typo like ``'Auto'`` or ``'none'`` must not silently force the
-    memory-unsafe broadcast regime via string truthiness."""
-    if flag not in (True, False, "auto"):
-        raise ValueError(
-            "broadcast regime flag must be True, False or 'auto', "
-            f"got {flag!r}"
-        )
-    if flag != "auto":
-        return bool(flag)
-    est = _estimated_bytes(proxy)
-    if est is not None and est <= _KERNEL_BYTE_LIMIT:
-        return True
-    return proxy.count() <= _KERNEL_ROW_LIMIT
 
 
 def triangles_per_vertex_all(oriented: DataFrame) -> DataFrame:
@@ -204,19 +159,10 @@ def _pair_counts(
     deg(center), the resource-allocation numerator — computing both in
     one pass costs one extra int64 column).
 
-    ``broadcast_adjacency="auto"`` (the r4 default at the public API)
-    CHECKS the two kernel regime bounds at plan time instead of
-    trusting the call site: the kernel is selected iff the hub cap is
-    set (bound 2 — per-task pair memory C(τ,2)·centers/task) AND the
-    capped-center adjacency's Catalyst size estimate fits
-    ``_KERNEL_BYTE_LIMIT`` (bound 1 — driver CSR + broadcast); anything
-    else routes to the always-correct shuffle form. Explicit
-    ``True``/``False`` remain as overrides, except that the
-    memory-unsafe combination ``True`` with ``max_center_degree=None``
-    now raises: uncapped hub graphs violate bound 2 by construction
-    (measured 37-143 s swings from Python-heap thrash; the JVM shuffle
-    agg handles the same stream spill-managed) — there is no input on
-    which that pairing is the right plan.
+    ``broadcast_adjacency`` picks one of the two regimes below by the
+    rule in ``plans.regimes.resolve_broadcast_adjacency`` ("auto"
+    checks both kernel bounds at plan time; ``True`` without a hub cap
+    raises).
 
     Two physical regimes, both exact and bit-identical:
 
@@ -264,28 +210,9 @@ def _pair_counts(
     range in the kernel's bincount, emitted as int64; both regimes and
     the SQL oracle agree bit-for-bit."""
     centered = _wedge_centers(sym_edges, deg, max_center_degree)
-    if broadcast_adjacency not in (True, False, "auto"):
-        raise ValueError(
-            "broadcast_adjacency must be True, False or 'auto', "
-            f"got {broadcast_adjacency!r}"
-        )
-    if broadcast_adjacency == "auto":
-        # both regime bounds: the hub cap for per-task pair memory
-        # (bound 2, a plan property), then the capped adjacency's size
-        # for the driver-CSR broadcast (bound 1 — plan-stats probe with
-        # count fallback, see _resolve_broadcast_state)
-        broadcast_adjacency = (
-            max_center_degree is not None
-            and _resolve_broadcast_state("auto", centered.select("v", "u"))
-        )
-    elif broadcast_adjacency and max_center_degree is None:
-        raise ValueError(
-            "broadcast_adjacency=True with max_center_degree=None is "
-            "memory-unsafe: the kernel's per-task pair sort is bounded "
-            "only by the hub cap (C(tau,2) per center). Set a cap, or "
-            "use broadcast_adjacency=False/'auto' — the shuffle form "
-            "handles uncapped hub graphs spill-managed."
-        )
+    broadcast_adjacency = resolve_broadcast_adjacency(
+        broadcast_adjacency, centered.select("v", "u"), max_center_degree
+    )
     if not broadcast_adjacency:
         e1 = centered.select(
             "v", "u", F.expr("1000000 div cdeg").cast("long").alias("ra_part")
@@ -583,13 +510,8 @@ def bfs_distances(
     The frontier is vertex-sized (a slice of the visited set) while the
     edge table is edge-sized: the frontier broadcasts onto the pinned
     edge table, making each expansion shuffle-free on the edge side.
-    The default ``broadcast_state="auto"`` picks that regime from the
-    edge table's Catalyst size estimate (a sound upper bound on the
-    vertex-sized state) and degrades to a shuffle join past the byte
-    ceiling — the 10^12-url regime where a frontier can exceed the
-    broadcast limit; ``True``/``False`` force a regime (same tri-state
-    as pagerank/label_propagation/core_numbers)."""
-    broadcast_state = _resolve_broadcast_state(broadcast_state, sym_edges)
+    ``broadcast_state`` picks that regime (``plans.regimes``)."""
+    broadcast_state = resolve_broadcast_state(broadcast_state, sym_edges)
     pin = F.broadcast if broadcast_state else (lambda df: df)
     sym_edges = sym_edges.localCheckpoint(eager=False)  # one round-loop pin
     spark = sym_edges.sparkSession
@@ -637,14 +559,10 @@ def sssp_distances(
     diameter exceeds ``rounds``. Each round is one key-partitioned join
     (state onto edge src) + one min-agg on dst + one left-join fold —
     the same shuffle keys every round, so AQE reuses the partitioning.
-    The distance state is vertex-sized: while it fits the broadcast
-    ceiling it broadcasts onto the pinned edge table, so the relax
-    join ships no edge bytes per round; ``broadcast_state="auto"``
-    (default) decides that from the edge table's size estimate and
-    swaps in the shuffle join for the 10^12-vertex regime where a
-    |V|-row state exceeds the broadcast limit (``True``/``False``
-    force a regime, same tri-state as pagerank/label_propagation)."""
-    broadcast_state = _resolve_broadcast_state(broadcast_state, weighted_edges)
+    The distance state is vertex-sized: broadcast onto the pinned edge
+    table, the relax join ships no edge bytes per round;
+    ``broadcast_state`` picks that regime (``plans.regimes``)."""
+    broadcast_state = resolve_broadcast_state(broadcast_state, weighted_edges)
     pin = F.broadcast if broadcast_state else (lambda df: df)
     INF = 1 << 40
     weighted_edges = weighted_edges.localCheckpoint(eager=False)
@@ -736,10 +654,8 @@ def core_numbers(
 
     Physical shape per round: the state is VERTEX-sized (one long per
     vertex) while the work table is EDGE-sized, so the state ships to
-    the edges — broadcast while the size estimate allows
-    (``broadcast_state="auto"``, resolved from the edge table's
-    Catalyst stats; beyond the ceiling — the 10^12-url regime — it
-    degrades to a shuffle join; ``True``/``False`` force a regime). The edge table is hash-partitioned on src ONCE
+    the edges — broadcast or shuffled as ``broadcast_state`` resolves
+    (``plans.regimes``). The edge table is hash-partitioned on src ONCE
     up front; the broadcast join preserves that partitioning, so the
     per-vertex window (row_number over values desc — per-vertex, never
     global) and the max(min(rank, value)) agg both reuse it: a round is
@@ -751,7 +667,7 @@ def core_numbers(
     sym_edges = sym_edges.repartition("src").localCheckpoint(eager=True)
     h = degrees(sym_edges).select("v", F.col("deg").cast("long").alias("h"))
     w = Window.partitionBy("v").orderBy(F.desc("nh"))
-    broadcast_state = _resolve_broadcast_state(broadcast_state, sym_edges)
+    broadcast_state = resolve_broadcast_state(broadcast_state, sym_edges)
     pin = F.broadcast if broadcast_state else (lambda df: df)
     for _ in range(rounds):
         nbr = sym_edges.join(
@@ -815,11 +731,9 @@ def shortest_path_counts(
     the principled oracle-checkable unit; sampled betweenness composes
     it with a driver-side accumulation in tests if ever needed.)
 
-    ``broadcast_state="auto"`` (default) broadcasts the frontier while
-    the edge-table size estimate fits the ceiling and swaps in a
-    shuffle join past it (10^12-url frontiers — same tri-state as
-    pagerank/label_propagation/bfs_distances)."""
-    broadcast_state = _resolve_broadcast_state(broadcast_state, sym_edges)
+    ``broadcast_state`` picks the frontier's broadcast regime
+    (``plans.regimes``; see bfs_distances)."""
+    broadcast_state = resolve_broadcast_state(broadcast_state, sym_edges)
     pin = F.broadcast if broadcast_state else (lambda df: df)
     # pinned once: every level joins the frontier against `sym_edges`
     sym_edges = sym_edges.localCheckpoint(eager=False)

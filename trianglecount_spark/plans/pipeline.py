@@ -67,6 +67,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trianglecount_spark.plans.regimes import fits_31_bits
 from trianglecount_spark.sources import fsio
 
 
@@ -186,12 +187,13 @@ def run_pipeline(
     # symmetrize+dedupe distinct — measured 2→8 scaling 0.77→0.81 on
     # the all-shuffle web job, tools/scaling_job.py v11) is legal only
     # while dictionary vids fit 31 bits; the dictionary is dense from
-    # 0, so the vertex COUNT is the bound. Above it (a >2-billion-url
-    # crawl) the plan reverts to the unpacked pair — same output.
+    # 0, so the largest vid is the vertex count - 1. Above it (a
+    # >2-billion-url crawl) the plan reverts to the unpacked pair —
+    # same output.
     metrics["n_vertices"] = spark.read.parquet(verts_dir).count()
     canon = (
         canonicalize_edges_packed
-        if metrics["n_vertices"] < (1 << 31)
+        if fits_31_bits(metrics["n_vertices"] - 1)
         else canonicalize_edges
     )
     sym = canon(edges).persist()

@@ -29,7 +29,7 @@ from trianglecount_spark.operators.lpa import label_propagation
 from trianglecount_spark.operators.pagerank import pagerank
 from trianglecount_spark.operators.triangles import (
     triangles_join,
-    triangles_per_vertex_join,
+    triangles_per_vertex_arrays,
     triangles_per_vertex_kernel,
 )
 
@@ -227,8 +227,10 @@ def q_wedge_count(spark, sf_dir):
 
 
 def q_triangle_total(spark, sf_dir):
-    return triangles_join(copurchase_oriented(spark, sf_dir)).agg(
-        F.count("*").alias("n_triangles")
+    # arrays strategy — measured faster than the join form on this graph
+    # (sf0.1: 1.27 s vs 6.18 s, BENCH_r05.json)
+    return q_triangles_per_vertex(spark, sf_dir).agg(
+        F.coalesce(F.sum("tri"), F.lit(0)).alias("n_triangles")
     )
 
 
@@ -268,16 +270,8 @@ def q_triangle_total_metis(spark, sf_dir):
     )
 
 
-def q_triangle_total_arrays(spark, sf_dir):
-    from trianglecount_spark.operators.triangles import triangles_per_vertex_arrays
-
-    return triangles_per_vertex_arrays(copurchase_oriented(spark, sf_dir)).agg(
-        F.coalesce(F.sum("tri"), F.lit(0)).alias("n_triangles")
-    )
-
-
 def q_triangles_per_vertex(spark, sf_dir):
-    return triangles_per_vertex_join(copurchase_oriented(spark, sf_dir))
+    return triangles_per_vertex_arrays(copurchase_oriented(spark, sf_dir))
 
 
 def q_top_degree(spark, sf_dir):
@@ -619,8 +613,6 @@ def q_graph_summary(spark, sf_dir):
         F.expr("sum(deg) div 2").alias("n_edges"),
         F.sum(F.expr("(deg * (deg - 1)) div 2")).alias("n_wedges"),
     )
-    from trianglecount_spark.operators.triangles import triangles_per_vertex_arrays
-
     # arrays strategy — fastest measured at every single-box size
     # (BENCH/BASELINE.md crossover table); same exact count
     tri = triangles_per_vertex_arrays(orient(sym, deg)).agg(
@@ -3639,7 +3631,6 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "triangle_total": q_triangle_total,
         "triangle_total_kernel": q_triangle_total_kernel,
         "triangle_total_metis": q_triangle_total_metis,
-        "triangle_total_arrays": q_triangle_total_arrays,
         "triangles_per_vertex": q_triangles_per_vertex,
         "top_degree": q_top_degree,
         "triangle_total_bipartite": q_triangle_total_bipartite,
@@ -4789,7 +4780,6 @@ def oracle() -> dict[str, str]:
         + "SELECT count(*) AS n_wedges FROM o e1 JOIN o e2 ON e1.dst = e2.src",
         "triangle_total": _CP + tri_sql,
         "triangle_total_kernel": _CP + tri_sql,
-        "triangle_total_arrays": _CP + tri_sql,
         "triangles_per_vertex": _CP
         + (
             "SELECT e1.src AS v, count(*) AS tri FROM o e1 "

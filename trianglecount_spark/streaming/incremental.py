@@ -60,7 +60,14 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from trianglecount_spark.plans.regimes import fits_broadcast_bytes
+
 EDGE_SCHEMA = "src long, dst long"
+
+# Broadcast size charged per adjacency-slice row (v, w, is_old, key):
+# with it the byte ceiling admits ≈4.2M slice rows, the bound this
+# regime was measured under.
+_SLICE_ROW_BYTES = 128
 
 
 def _canonical(df: DataFrame) -> DataFrame:
@@ -83,7 +90,6 @@ def incremental_triangle_count(
     n_files: int = 8,
     n_buckets: int = 16,
     state_dir: str | None = None,
-    broadcast_slice_rows: int = 4_000_000,
 ) -> DataFrame:
     """Stage ``raw_edges(src, dst)`` as ``n_files`` parquet files, stream
     them one file per micro-batch, maintain the canonical edge set and
@@ -184,9 +190,9 @@ def incremental_triangle_count(
         # sf0.1 this is wall-time parity with the shuffle plan (the
         # hash-table build offsets the exchange saved); the win is
         # plan-shape at scale — no wedge-stream shuffle to spill.
-        # Above the threshold the joins fall back to shuffles on
+        # Above the ceiling the joins fall back to shuffles on
         # a / (b, w).
-        if n_slice + 2 * n_new <= broadcast_slice_rows:
+        if fits_broadcast_bytes((n_slice + 2 * n_new) * _SLICE_ROW_BYTES):
             s1, s2 = F.broadcast(s1), F.broadcast(s2)
         closed = (
             e.join(s1, "a")
