@@ -1,7 +1,7 @@
 """Benchmark harness (driver contract: prints ONE JSON line).
 
 Headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS]:
+local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may run on):
 
   tc_join      — triangle count, declarative join form (copurchase graph)
   tc_kernel    — triangle count, partitioned-CSR kernel form (same graph)
@@ -55,7 +55,7 @@ from trianglecount_spark.operators.triangles import (  # noqa: E402
     triangles_per_vertex_kernel,
 )
 from trianglecount_spark.plans.queries import copurchase_oriented, copurchase_sym  # noqa: E402
-from trianglecount_spark.session import get_spark  # noqa: E402
+from trianglecount_spark.session import default_parallelism, get_spark  # noqa: E402
 
 # r3/r4-comparable core set: queries whose sum matched BENCH_r03/r04's
 # "value" before the two scaling-criterion rows were added in r5
@@ -67,7 +67,7 @@ _CORE10 = (
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_parallelism()
     sf = float(sf_dir.rstrip("/").split("sf")[-1]) if "sf" in sf_dir else -1.0
 
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))

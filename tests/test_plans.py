@@ -87,17 +87,6 @@ def test_web_pipeline_end_to_end(spark):
     assert total >= 0
 
 
-def test_top3_per_user_uses_window_group_limit(spark):
-    # the rank<=3 filter must be pushed into a partial per-partition
-    # top-k (WindowGroupLimit) BEFORE the shuffle — without it every
-    # event row shuffles just to be discarded
-    from trianglecount_spark.plans.queries import q_events_top3_per_user
-
-    plan = _plan(q_events_top3_per_user(spark, SF))
-    assert "WindowGroupLimit" in plan, plan[:3000]
-    assert plan.count("Partial") >= 1, plan[:3000]
-
-
 def test_stratified_sample_filter_is_scan_side(spark):
     # the md5 coin is a deterministic row-local predicate: it must sit
     # in the scan stage (no shuffle at all in the plan)

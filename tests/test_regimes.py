@@ -5,9 +5,11 @@ covered in tests/test_metrics.py."""
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import SparkRuntimeException
 
 from tests.conftest import GOLDEN, edges_df
 from trianglecount_spark.operators import canonicalize_edges, orient
+from trianglecount_spark.operators.canonicalize import canonicalize_edges_packed
 from trianglecount_spark.operators.triangles import (
     triangles_join,
     weighted_triangle_total,
@@ -22,6 +24,16 @@ def test_fits_31_bits_boundary():
     assert R.fits_31_bits(1 << 31) is False
     assert R.fits_31_bits(0) is True
     assert R.fits_31_bits(None) is False  # unknown range: wide path
+
+
+def test_packed_canonicalize_rejects_ids_outside_31_bits(spark):
+    # 2^31 and -1 would pack into wrong keys, so the job fails instead;
+    # 2^31 - 1 still packs and matches the pair form
+    # (tests/test_canonicalize.py::test_canonicalize_packed_matches_unpacked)
+    for bad in (1 << 31, -1):
+        df = edges_df(spark, [(0, 1), (bad, 2)])
+        with pytest.raises(SparkRuntimeException, match=r"outside \[0, 2\^31\)"):
+            canonicalize_edges_packed(df).collect()
 
 
 def test_closure_flag_typo_raises(spark):

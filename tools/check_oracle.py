@@ -49,7 +49,7 @@ def value_hash(cols, rows):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark(app_name="oracle-check", cores=8, shuffle_partitions=8)
+    spark = get_spark(app_name="oracle-check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -59,11 +59,11 @@ from trianglecount_spark.operators.triangles import (  # noqa: E402
     triangles_join,
     triangles_per_vertex_kernel,
 )
-from trianglecount_spark.session import get_spark  # noqa: E402
+from trianglecount_spark.session import default_driver_memory, get_spark  # noqa: E402
 from trianglecount_spark.sources.synth import powerlaw_edges  # noqa: E402
 
 SHUFFLE_PARTITIONS = 64
-DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+DRIVER_MEM = default_driver_memory()
 # Bump when the measurement protocol changes (JVM flags, tmpfs shuffle,
 # reps discipline, kernel implementation): cached cells from a different
 # harness version are discarded by tools/scaling.py rather than merged.
@@ -107,8 +107,10 @@ DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
 # bandwidth is diluted, consistent with the piecewise probe's story.
 # v12 (webe2e/webe2esh) = the packed-canon gate counts the url
 # dictionary inside the timed region (plans/regimes.fits_31_bits).
-_DEFAULT_HARNESS = 6
-HARNESS_VERSIONS = {"tc_kernel": 7, "linkpred": 7, "webe2e": 12, "webe2esh": 12}
+# Every job +1 = the pre-touched heap (-Xms) is sized from the host
+# (session.default_driver_memory: RAM/3, at most 6g) instead of 24g.
+_DEFAULT_HARNESS = 7
+HARNESS_VERSIONS = {"tc_kernel": 8, "linkpred": 8, "webe2e": 13, "webe2esh": 13}
 HARNESS_VERSION = _DEFAULT_HARNESS  # imported by tools/scaling.py
 
 

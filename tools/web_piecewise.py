@@ -39,9 +39,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from trianglecount_spark.session import default_driver_memory  # noqa: E402
+
 N_PAGES, N_SITES = 2_400_000, 80_000
 SHUFFLE_PARTITIONS = 64
-DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+DRIVER_MEM = default_driver_memory()
 
 
 def main() -> None:

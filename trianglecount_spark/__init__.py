@@ -10,13 +10,15 @@ Layout
 ------
 - ``session``    — tuned SparkSession builders (local + cluster-shaped confs)
 - ``operators``  — graph canonicalization, orientation, triangle counting
-                   (join form + partitioned-CSR kernel form with hub salting),
+                   (per-edge array-intersection form, the default; join
+                   form; partitioned-CSR kernel form with hub salting),
                    PageRank / CC / LPA, dedup, knn, multimodal
 - ``sources``    — synthetic pages table, testdata loaders, CSR text parity IO
 - ``functions``  — vectorized (Arrow/pandas) column functions: href/text
                    extraction, text quality, minhash/simhash
 - ``plans``      — partitioning/skew helpers and explain utilities
-- ``streaming``  — Structured Streaming edge ingestion + windowed degrees
+- ``streaming``  — Structured Streaming edge ingestion, windowed degrees,
+                   incremental triangle counting
 """
 
 __version__ = "0.1.0"

@@ -17,8 +17,10 @@ table is V rows (billions) — it shuffles; never assume it broadcasts.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from trianglecount_spark.plans.regimes import in_31_bits
 
 
 def canonicalize_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -55,7 +57,10 @@ def canonicalize_edges_packed(
     REQUIRES ``0 <= id < 2^31`` for both endpoints — the contract of
     dictionary-mapped vids (``vertex_dictionary_scalable`` ranks are
     dense from 0). Callers gate on ``plans.regimes.fits_31_bits`` and
-    use the unpacked form otherwise.
+    use the unpacked form otherwise. An id outside that range fails the
+    job when the key is built (``plans.regimes.in_31_bits``, checked in
+    the packing projection — no extra pass) instead of packing into a
+    wrong key.
 
     The output columns are always LONG, whatever the input type; the
     unpacked form keeps the input's column types.
@@ -67,11 +72,17 @@ def canonicalize_edges_packed(
         F.col(src).cast("long").alias("src"),
         F.col(dst).cast("long").alias("dst"),
     ).where(F.col("src") != F.col("dst"))
-    packed = e.select(
-        (F.shiftleft(F.col("src"), 32) + F.col("dst")).alias("pk")
-    ).unionByName(
-        e.select((F.shiftleft(F.col("dst"), 32) + F.col("src")).alias("pk"))
-    )
+    in_range = in_31_bits(F.col("src")) & in_31_bits(F.col("dst"))
+    out_of_range = F.raise_error(F.format_string(
+        "canonicalize_edges_packed: edge %d -> %d has an id outside "
+        "[0, 2^31); use canonicalize_edges", "src", "dst"
+    ))
+
+    def pack(hi: str, lo: str) -> Column:
+        pk = F.shiftleft(F.col(hi), 32) + F.col(lo)
+        return F.when(in_range, pk).otherwise(out_of_range).alias("pk")
+
+    packed = e.select(pack("src", "dst")).unionByName(e.select(pack("dst", "src")))
     return packed.distinct().select(
         F.shiftright("pk", 32).alias("src"),
         (F.col("pk") % F.lit(1 << 32)).alias("dst"),

@@ -98,24 +98,6 @@ def hll_estimate(regs: DataFrame, keys: list[str] | None = None) -> DataFrame:
     )
 
 
-def hll_sketch(df: DataFrame, col: str) -> DataFrame:
-    """One row ``(n_buckets, s_scaled, estimate)`` — the HLL-estimated
-    distinct count of ``df[col]``. Exactly reproducible (see module
-    doc)."""
-    regs = hll_registers(df, col)
-    return regs.agg(
-        F.count("*").alias("n_buckets"),
-        (
-            F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), 53 - m_j)"))
-            + (F.lit(_M) - F.count("*")) * F.lit(1 << 53)
-        ).alias("s_scaled"),
-    ).select(
-        "n_buckets",
-        "s_scaled",
-        (F.expr(ALPHA_M2_SCALE) / F.col("s_scaled")).alias("estimate"),
-    )
-
-
 def cms_sketch(
     df: DataFrame,
     col: str,

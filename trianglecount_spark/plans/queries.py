@@ -331,47 +331,6 @@ def q_docs_sample_stratified(spark, sf_dir):
     )
 
 
-def q_events_top3_per_user(spark, sf_dir):
-    """Top-3 events by value per user with a total deterministic order
-    (value desc, ts, event_id). Catalyst's WindowGroupLimit pushes the
-    rank<=3 filter into per-partition partial top-k before the shuffle —
-    the scale shape for per-entity leaderboards."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("value").desc(), F.col("ts").asc(), F.col("event_id").asc()
-    )
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 3)
-        .select("user_id", "rn", "event_id", "value")
-    )
-
-
-def q_events_value_quantiles(spark, sf_dir):
-    """Exact discrete quantiles (p25/p50/p75/p90) of value per
-    event_type: rank each row in its type (deterministic value,event_id
-    order), then pick rank == ceil(q·n). Exact by construction — the
-    selected values are actual data points, no interpolation doubles.
-    Scale note: exact quantiles need a per-group total order; this is
-    the honest O(n log n)-per-group form, and the few-distinct-groups
-    skew is real — at 100 TB use approx_percentile (t-digest sketch,
-    partial-aggregated) unless exactness is contractual."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type").orderBy("value", "event_id")
-    r = ev.select(
-        "event_type",
-        "value",
-        F.row_number().over(w).alias("rn"),
-        F.count("*").over(Window.partitionBy("event_type")).alias("n"),
-    )
-    qs = F.explode(F.array(*[F.lit(q) for q in (0.25, 0.5, 0.75, 0.9)])).alias("q")
-    return (
-        r.select("event_type", "value", "rn", "n", qs)
-        .where(F.col("rn") == F.ceil(F.col("q") * F.col("n")))
-        .select("event_type", "q", "value")
-    )
-
-
 def q_lineitem_rollup(spark, sf_dir):
     """ROLLUP aggregation (grouping sets) — relational breadth the
     reference lacks entirely (SURVEY §2.5): per-(flag, status) subtotals,
@@ -764,22 +723,6 @@ def q_docs_inverted_index(spark, sf_dir):
     )
 
 
-def q_events_user_hll(spark, sf_dir):
-    """Deterministic HyperLogLog distinct-user estimate next to the
-    exact count (operators/sketches.py — portable md5 registers, exact
-    BIGINT register sum, one final double division; bit-identical on
-    any engine/partitioning, hence exactly oracle-checkable — unlike
-    approx_count_distinct's engine-private HLL++)."""
-    from trianglecount_spark.operators.sketches import hll_sketch
-
-    ev = _t(spark, sf_dir, "events")
-    sketch = hll_sketch(ev, "user_id")
-    exact = ev.agg(F.countDistinct("user_id").alias("n_exact"))
-    return exact.crossJoin(sketch).select(
-        "n_exact", "n_buckets", "s_scaled", "estimate"
-    )
-
-
 def q_docs_tfidf_top(spark, sf_dir):
     """Top TF-IDF term per document. The idf is the *rational* variant
     idf = N/df (ratio-of-exact-ints; same ranking as any monotone idf
@@ -812,161 +755,6 @@ def q_docs_tfidf_top(spark, sf_dir):
         scored.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
         .select("doc_id", F.col("t").alias("token"), "tf", "df", "score")
-    )
-
-
-def q_events_value_outliers(spark, sf_dir):
-    """Per-type z-score outliers (|z| > 3) — deterministic because the
-    moments are exact int64 (integer cents: n·S2 − S1² exact), IEEE
-    sqrt is correctly rounded by spec, and the one division is IEEE:
-    z = (x·n − S1) / sqrt(n·S2 − S1²) is bit-identical on any engine.
-    Shape: one groupBy for the 5-row moment table, broadcast back —
-    two passes over events, no window."""
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
-    )
-    mom = ev.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.sum("cents").alias("s1"),
-        F.sum(F.col("cents") * F.col("cents")).alias("s2"),
-    )
-    z = (F.col("cents") * F.col("n") - F.col("s1")) / F.sqrt(
-        (F.col("n") * F.col("s2") - F.col("s1") * F.col("s1")).cast("double")
-    )
-    return (
-        ev.join(F.broadcast(mom), "event_type")
-        .select("event_id", "event_type", "cents", z.alias("z"))
-        .where(F.abs(F.col("z")) > 3)
-    )
-
-
-def q_events_rolling_avg(spark, sf_dir):
-    """Per-user trailing 3-event moving average (window ROWS BETWEEN 2
-    PRECEDING AND CURRENT), deterministic order (ts, event_id); the
-    average is an exact-int-cents sum over an exact count — one IEEE
-    division."""
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        "ts",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-2, Window.currentRow)
-    )
-    return ev.select(
-        "user_id",
-        "event_id",
-        "cents",
-        (F.sum("cents").over(w) / F.count("*").over(w)).alias("avg3"),
-    )
-
-
-def q_events_pivot(spark, sf_dir):
-    """Crosstab: per-user event counts pivoted to one column per type
-    (`groupBy().pivot()` with explicit values — Catalyst rewrites to a
-    single pass of conditional aggregates, no shuffle per column)."""
-    kinds = ["click", "error", "purchase", "signup", "view"]
-    return (
-        _t(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .pivot("event_type", kinds)
-        .agg(F.count(F.lit(1)))
-        .na.fill(0, kinds)
-    )
-
-
-def q_events_funnel(spark, sf_dir):
-    """Ordered conversion funnel view → click → purchase: per user the
-    earliest view, the earliest click strictly after it, the earliest
-    purchase strictly after that; one summary row of stage counts plus
-    exact-int conversion ratios. Three groupBy-min passes (each a tiny
-    per-user aggregate), no window, no self-join explosion."""
-    ev = _t(spark, sf_dir, "events")
-
-    def first_after(kind, prev, name):
-        e = ev.where(F.col("event_type") == kind).select("user_id", "ts")
-        if prev is not None:
-            e = e.join(prev, "user_id").where(F.col("ts") > F.col("prev_ts"))
-        return e.groupBy("user_id").agg(F.min("ts").alias(name)).select(
-            "user_id", F.col(name).alias("prev_ts")
-        )
-
-    v = first_after("view", None, "t_view")
-    c = first_after("click", v, "t_click")
-    p = first_after("purchase", c, "t_purchase")
-    counts = (
-        v.agg(F.count("*").alias("n_view"))
-        .crossJoin(c.agg(F.count("*").alias("n_view_click")))
-        .crossJoin(p.agg(F.count("*").alias("n_view_click_purchase")))
-    )
-    return counts.select(
-        "n_view",
-        "n_view_click",
-        "n_view_click_purchase",
-        (F.col("n_view_click") / F.col("n_view")).alias("cr_click"),
-        (F.col("n_view_click_purchase") / F.col("n_view_click")).alias("cr_purchase"),
-    )
-
-
-def q_events_attribution(spark, sf_dir):
-    """Last-touch attribution: each purchase event matched to the
-    user's most recent click at-or-before it (operators/asof.py —
-    union + ordered-window as-of join, one key shuffle, no range-join
-    blowup). Clicks are pre-deduped to one row per (user, ts) by max
-    event_id so the match is deterministic; the oracle is DuckDB's
-    native ASOF LEFT JOIN over the same deduped stream."""
-    from trianglecount_spark.operators.asof import asof_join
-
-    ev = _t(spark, sf_dir, "events")
-    clicks = (
-        ev.where(F.col("event_type") == "click")
-        .groupBy("user_id", "ts")
-        .agg(F.max("event_id").alias("click_id"))
-    )
-    purch = ev.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    out = asof_join(
-        purch, clicks, on="user_id", left_ts="ts", right_ts="ts",
-        value_cols=["click_id"],
-    )
-    return out.select(
-        "event_id", "user_id", "ts", F.col("asof_click_id").alias("click_id")
-    )
-
-
-def q_events_error_overlap(spark, sf_dir):
-    """Range-containment join: how many same-user 5-minute error
-    windows contain each purchase (operators/interval.py — bucketized
-    equi-join, never a BroadcastNestedLoop theta join). Left semantics:
-    purchases inside no window report 0. Oracle: the plain SQL theta
-    join DuckDB can afford at oracle scale."""
-    from trianglecount_spark.operators.interval import interval_join
-
-    ev = _t(spark, sf_dir, "events")
-    err = ev.where(F.col("event_type") == "error").select(
-        F.col("user_id").alias("u"),
-        F.col("ts").alias("s"),
-        (F.col("ts") + F.expr("INTERVAL 5 MINUTES")).alias("e"),
-    )
-    purch = ev.where(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    pairs = interval_join(
-        purch.withColumnRenamed("user_id", "u"),
-        err, point_ts="ts", start_col="s", end_col="e", on="u",
-    )
-    n = pairs.groupBy("event_id").agg(F.count("*").alias("n_error_windows"))
-    return purch.join(n, "event_id", "left").select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.coalesce("n_error_windows", F.lit(0)).alias("n_error_windows"),
     )
 
 
@@ -1316,92 +1104,9 @@ def q_region_nation_volume(spark, sf_dir):
     )
 
 
-def _zorder_expr(xcol: str, ycol: str, bits: int = 12) -> str:
-    """Bit-interleaved Z-value of two non-negative ints (``bits`` bits
-    each) as a portable SQL expression — identical text runs on Spark
-    SQL and DuckDB, so the oracle replays the exact layout."""
-    terms = []
-    for i in range(bits):
-        terms.append(f"((({xcol} >> {i}) & 1) << {2 * i})")
-        terms.append(f"((({ycol} >> {i}) & 1) << {2 * i + 1})")
-    return "(" + " + ".join(terms) + ")"
-
-
-def q_events_zorder_stats(spark, sf_dir):
-    """Z-ORDER data layout (the multi-dimensional clustering technique
-    behind Delta/Iceberg OPTIMIZE ZORDER): interleave the bits of
-    (user_id, day-since-epoch-of-corpus) into a Z-value, bucket rows by
-    the value's top 4 bits (pure arithmetic — no global ntile window),
-    and report each bucket's row count and per-dimension min/max spans.
-    Tight spans on BOTH dimensions are what make file-level min/max
-    skipping effective for 2-D predicates at 100 TB — this query IS the
-    measurement a layout job would emit. All integer arithmetic."""
-    ev = _t(spark, sf_dir, "events")
-    x = "CAST(user_id AS BIGINT)"
-    # midnight base ⇒ Spark's complete-day count == DuckDB's
-    # boundary-crossing count
-    y = "CAST(timestampdiff(DAY, TIMESTAMP '2024-01-01', ts) AS BIGINT)"
-    z = _zorder_expr("xv", "yv")
-    rows = ev.selectExpr(f"{x} AS xv", f"{y} AS yv").selectExpr(
-        "xv", "yv", f"CAST({z} AS BIGINT) AS zv"
-    )
-    return (
-        rows.selectExpr("xv", "yv", "CAST(zv >> 12 AS BIGINT) AS bucket")
-        .groupBy("bucket")
-        .agg(
-            F.count("*").cast("long").alias("n_rows"),
-            F.min("xv").alias("min_user"),
-            F.max("xv").alias("max_user"),
-            F.min("yv").alias("min_day"),
-            F.max("yv").alias("max_day"),
-        )
-    )
-
-
-def q_events_value_iqr(spark, sf_dir):
-    """GROUPED-AGG pandas UDF (the Arrow-vectorized UDAF surface,
-    complementing mapInPandas/applyInArrow elsewhere): per event type,
-    exact DISCRETE quartiles of the cent-value distribution via one
-    numpy sort per group — p25 = sorted[(n−1) div 4], p75 =
-    sorted[3(n−1) div 4] (the lower-element convention, integer index
-    arithmetic, so the result is element-exact, no interpolation, no
-    float). A UDAF receives each group as ONE Arrow batch — fine for
-    per-type groups; a 100 TB per-key cardinality would use the
-    sketch/exact-quantile queries instead (documented trade-off)."""
-    import numpy as np
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    # explicit GROUPED_AGG: this module's `from __future__ import
-    # annotations` stringifies signatures, so type inference can't run
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def p25(v):
-        a = np.sort(v.to_numpy())
-        return int(a[(len(a) - 1) // 4])
-
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def p75(v):
-        a = np.sort(v.to_numpy())
-        return int(a[(3 * (len(a) - 1)) // 4])
-
-    ev = _t(spark, sf_dir, "events").select(
-        "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("cents"),
-    )
-    return (
-        ev.groupBy("event_type")
-        .agg(p25("cents").alias("p25_cents"), p75("cents").alias("p75_cents"))
-        .select(
-            "event_type",
-            "p25_cents",
-            "p75_cents",
-            (F.col("p75_cents") - F.col("p25_cents")).alias("iqr_cents"),
-        )
-    )
-
-
 def q_orders_rolling_30d(spark, sf_dir):
-    """RANGE-frame window (the time-interval frame, complementing
-    events_rolling_avg's ROWS frame): per customer, each order's
+    """RANGE-frame window (the time-interval frame, as opposed to a
+    ROWS frame): per customer, each order's
     trailing-30-day revenue — orders within [ts−30d, ts] by VALUE
     range, however many rows that is. Spark expresses the interval
     frame as rangeBetween over unix microseconds (equivalent by
@@ -1489,76 +1194,6 @@ def q_densest_subgraph(spark, sf_dir):
     from trianglecount_spark.operators.metrics import densest_subgraph
 
     return densest_subgraph(copurchase_sym(spark, sf_dir), rounds=8)
-
-
-def q_events_rfm(spark, sf_dir):
-    """RFM segmentation (recency / frequency / monetary — the classic
-    customer scoring): per-user metrics, then 1–4 scores by comparison
-    against the EXACT discrete quartiles of each metric's distribution
-    (sorted-list indexing, the events_value_iqr convention — no ntile,
-    no global row window). Recency is integer days via micros div
-    86400e6 (identical integer division both engines — NOT calendar
-    date_diff, whose boundary-crossing count differs from complete
-    days for non-midnight stamps); recency scores invert (recent =
-    4). The quartile thresholds are a 1-row aggregate (users ≪
-    events) cross-joined back — at 10⁹ users the same plan works with
-    the thresholds from the exact-quantile query instead."""
-    ev = _t(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    pu = (
-        ev.groupBy("user_id")
-        .agg(
-            F.max(F.unix_micros(F.col("ts").cast("timestamp"))).alias("last_us"),
-            F.count("*").cast("long").alias("frequency"),
-            F.sum(
-                F.when(F.col("event_type") == "purchase", cents).otherwise(0)
-            ).cast("long").alias("monetary_cents"),
-        )
-        .crossJoin(
-            ev.agg(
-                F.max(F.unix_micros(F.col("ts").cast("timestamp"))).alias("mx_us")
-            )
-        )
-        .select(
-            "user_id",
-            F.expr("CAST((mx_us - last_us) div 86400000000 AS BIGINT)").alias(
-                "recency_days"
-            ),
-            "frequency",
-            "monetary_cents",
-        )
-    )
-    th = pu.agg(
-        F.sort_array(F.collect_list("recency_days")).alias("ra"),
-        F.sort_array(F.collect_list("frequency")).alias("fa"),
-        F.sort_array(F.collect_list("monetary_cents")).alias("ma"),
-        F.count("*").alias("n"),
-    ).selectExpr(
-        *[
-            f"element_at({a}, CAST(1 + ({q} * (n - 1)) DIV 4 AS INT)) AS {a}q{q}"
-            for a in ("ra", "fa", "ma")
-            for q in (1, 2, 3)
-        ]
-    )
-
-    def score(col, q1, q2, q3, invert=False):
-        s = (
-            F.when(F.col(col) <= F.col(q1), 1)
-            .when(F.col(col) <= F.col(q2), 2)
-            .when(F.col(col) <= F.col(q3), 3)
-            .otherwise(4)
-        )
-        return (F.lit(5) - s if invert else s).cast("long")
-
-    return pu.crossJoin(th).select(
-        "user_id",
-        "recency_days",
-        "frequency",
-        "monetary_cents",
-        score("recency_days", "raq1", "raq2", "raq3", invert=True).alias("r"),
-        score("frequency", "faq1", "faq2", "faq3").alias("f"),
-        score("monetary_cents", "maq1", "maq2", "maq3").alias("m"),
-    )
 
 
 def q_copurchase_rules(spark, sf_dir):
@@ -1735,45 +1370,6 @@ def q_part_avg_qty_correlated(spark, sf_dir):
     )
 
 
-def q_events_sessions(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gaps = ev.withColumn("pts", F.lag("ts").over(w)).withColumn(
-        "new_sess",
-        F.when(F.col("pts").isNull(), F.lit(0))
-        .when(
-            F.unix_micros(F.col("ts").cast("timestamp"))
-            - F.unix_micros(F.col("pts").cast("timestamp"))
-            > F.lit(1800000000),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0)),
-    )
-    return gaps.groupBy("user_id").agg(
-        (F.lit(1) + F.sum("new_sess")).alias("n_sessions")
-    )
-
-
-def q_events_transitions(spark, sf_dir):
-    """First-order Markov transition counts over per-user event
-    sequences — the clickstream bigram table (next-event prediction,
-    funnel discovery). lead() over a window PARTITIONED by user_id
-    (never global — per-user sequences are short and independent, so
-    the window is a plain hash shuffle on user_id at any corpus size);
-    one (from, to) partial-agg shuffle after. Ties broken by event_id
-    exactly like events_sessions."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    nxt = ev.withColumn("to_type", F.lead("event_type").over(w))
-    return (
-        nxt.where(F.col("to_type").isNotNull())
-        .groupBy(
-            F.col("event_type").alias("from_type"), F.col("to_type")
-        )
-        .agg(F.count("*").alias("n"))
-    )
-
-
 def q_events_stream_incremental(spark, sf_dir):
     """Incremental triangle maintenance over streamed micro-batches
     (streaming/incremental.py — foreachBatch, delta-proportional work,
@@ -1783,139 +1379,6 @@ def q_events_stream_incremental(spark, sf_dir):
 
     row = incremental_triangle_count(spark, events_pairs(spark, sf_dir), n_files=4)
     return row.select("n_edges", "n_triangles")
-
-
-def q_events_stream_windows(spark, sf_dir):
-    """Structured Streaming end-to-end: event-time window + watermark over
-    the events table, drained with availableNow into a parquet sink and
-    read back (streaming/edges_stream.py). [EXT] — the reference is
-    batch-only (SURVEY §2.5)."""
-    from trianglecount_spark.streaming.edges_stream import windowed_event_counts
-
-    return windowed_event_counts(spark, sf_dir)
-
-
-def q_events_stream_sessions(spark, sf_dir):
-    """Stateful streaming sessionization (session_window merge state +
-    watermark), availableNow-drained; the batch analog is
-    q_events_sessions. [EXT]."""
-    from trianglecount_spark.streaming.edges_stream import session_event_counts
-
-    return session_event_counts(spark, sf_dir)
-
-
-def q_events_stream_sliding(spark, sf_dir):
-    """Streaming SLIDING-window aggregation (1h windows every 30min —
-    each event in 2 windows), availableNow-drained; emission = windows
-    closed by the settled watermark, enumerated closed-form by the
-    oracle. [EXT]."""
-    from trianglecount_spark.streaming.edges_stream import sliding_event_counts
-
-    return sliding_event_counts(spark, sf_dir)
-
-
-def q_events_stream_alarms(spark, sf_dir):
-    """Custom stateful streaming operator (applyInPandasWithState):
-    per-user running purchase spend with threshold-crossing alarm rows
-    — GroupState holds one long per user, O(users) state on an
-    unbounded stream. The oracle is the equivalent batch window query
-    (running cents sum, emit on level increase). [EXT]."""
-    from trianglecount_spark.streaming.edges_stream import spend_alarms
-
-    return spend_alarms(spark, sf_dir, threshold_cents=5000)
-
-
-def q_events_stream_upsert(spark, sf_dir):
-    """foreachBatch keyed upsert (streaming MERGE pattern): per-user
-    latest event + running count folded into a parquet state snapshot
-    per micro-batch; associative/commutative merge ⇒ batching-
-    independent final state = the closed-form latest-row-per-key query.
-    [EXT] streaming/edges_stream.py:streamed_upsert_state."""
-    from trianglecount_spark.streaming.edges_stream import streamed_upsert_state
-
-    return streamed_upsert_state(spark, sf_dir)
-
-
-def q_events_cohort_retention(spark, sf_dir):
-    """Weekly cohort retention matrix: users grouped by first-activity
-    week, counted distinct per weeks-since-cohort — the standard
-    retention triangle. Two hash aggregates (per-user cohort, then the
-    (cohort, offset) distinct count); week buckets via date_trunc
-    (ISO Monday weeks in both engines), offsets as exact day
-    differences / 7."""
-    ev = _t(spark, sf_dir, "events")
-    wk = F.date_trunc("week", F.col("ts"))
-    cohort = ev.groupBy("user_id").agg(F.min(wk).alias("cohort_week"))
-    act = ev.select("user_id", wk.alias("week")).distinct()
-    return (
-        act.join(cohort, "user_id")
-        .select(
-            "cohort_week",
-            (F.datediff("week", "cohort_week") / 7).cast("long").alias("week_offset"),
-            "user_id",
-        )
-        .groupBy("cohort_week", "week_offset")
-        .agg(F.countDistinct("user_id").alias("n_users"))
-    )
-
-
-def q_events_user_journeys(spark, sf_dir):
-    """Per-user journey strings: the full ordered event-type sequence
-    per user, one hash aggregate (sort_array over collected
-    (ts, event_id, type) structs — per-group in-memory sort, bounded by
-    real per-user history lengths, never a global sort). The string
-    form ('click>view>...') is what sequence-mining and session-model
-    training consume."""
-    ev = _t(spark, sf_dir, "events")
-    seq = F.expr(
-        "array_join(transform(sort_array(collect_list("
-        "struct(ts, event_id, event_type))), x -> x.event_type), '>')"
-    )
-    return ev.groupBy("user_id").agg(
-        seq.alias("journey"), F.count("*").alias("n_events")
-    )
-
-
-def q_events_props_json(spark, sf_dir):
-    """JSON extraction surface (SURVEY §2.5 noted the reference has no
-    json functions at all): parse the ``props`` JSON column with an
-    explicit schema (``from_json`` — schema-on-read, pushdown-friendly,
-    no per-row Python), then aggregate the extracted field per event
-    type. Exact integers."""
-    ev = _t(spark, sf_dir, "events")
-    k = F.from_json("props", "k BIGINT")["k"]
-    return (
-        ev.select("event_type", k.alias("k"))
-        .groupBy("event_type")
-        .agg(
-            F.sum("k").alias("sum_k"),
-            F.min("k").alias("min_k"),
-            F.max("k").alias("max_k"),
-            F.count_if(F.col("k").isNull()).alias("n_null"),
-        )
-    )
-
-
-def q_events_stream_attribution(spark, sf_dir):
-    """Stream-STREAM interval join (streaming/edges_stream.py
-    ``stream_attribution_pairs``): purchases joined to the same user's
-    clicks within the preceding 30 min, watermarks on both sides. With
-    watermark ≥ lookback the inner join is complete, so the drained
-    output equals the batch interval join — the oracle. [EXT]."""
-    from trianglecount_spark.streaming.edges_stream import stream_attribution_pairs
-
-    return stream_attribution_pairs(spark, sf_dir)
-
-
-def q_events_stream_dedup(spark, sf_dir):
-    """Streaming ingest-dedup: dropDuplicatesWithinWatermark on
-    (user_id, event_type) with watermark-bounded state, availableNow-
-    drained (streaming/edges_stream.py ``streamed_dedup_keys``). Emits
-    the dedup key only, so the result is exactly the distinct key set —
-    the oracle is closed-form SELECT DISTINCT. [EXT]."""
-    from trianglecount_spark.streaming.edges_stream import streamed_dedup_keys
-
-    return streamed_dedup_keys(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -3650,7 +3113,6 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "katz_copurchase": q_katz_copurchase,
         "partition_replication": q_partition_replication,
         "copurchase_rules": q_copurchase_rules,
-        "events_rfm": q_events_rfm,
         "densest_subgraph": q_densest_subgraph,
         "triangle_weight_total": q_triangle_weight_total,
         "web_host_pagerank": q_web_host_pagerank,
@@ -3665,8 +3127,6 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "part_avg_qty_correlated": q_part_avg_qty_correlated,
         "orders_rolling_30d": q_orders_rolling_30d,
         "part_set_ops": q_part_set_ops,
-        "events_value_iqr": q_events_value_iqr,
-        "events_zorder_stats": q_events_zorder_stats,
         "triangle_list_sample": q_triangle_list_sample,
         "docs_quality_deciles": q_docs_quality_deciles,
         "modularity_lpa": q_modularity_lpa,
@@ -3676,19 +3136,7 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lineitem_agg": q_lineitem_agg,
         "orders_revenue_topn": q_orders_revenue_topn,
         "region_nation_volume": q_region_nation_volume,
-        "events_sessions": q_events_sessions,
-        "events_transitions": q_events_transitions,
-        "events_props_json": q_events_props_json,
-        "events_user_journeys": q_events_user_journeys,
-        "events_cohort_retention": q_events_cohort_retention,
         "events_stream_incremental": q_events_stream_incremental,
-        "events_stream_windows": q_events_stream_windows,
-        "events_stream_sessions": q_events_stream_sessions,
-        "events_stream_sliding": q_events_stream_sliding,
-        "events_stream_alarms": q_events_stream_alarms,
-        "events_stream_upsert": q_events_stream_upsert,
-        "events_stream_dedup": q_events_stream_dedup,
-        "events_stream_attribution": q_events_stream_attribution,
         "clustering_coeff": q_clustering_coeff,
         "kcore_suppliers": q_kcore_suppliers,
         "coreness_copurchase": q_coreness_copurchase,
@@ -3698,8 +3146,6 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "graph_summary": q_graph_summary,
         "link_prediction": q_link_prediction,
         "link_prediction_exact": q_link_prediction_exact,
-        "events_attribution": q_events_attribution,
-        "events_error_overlap": q_events_error_overlap,
         "clique4": q_clique4,
         "square_count": q_square_count,
         "degree_assortativity": q_degree_assortativity,
@@ -3722,11 +3168,6 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lineitem_stats": q_lineitem_stats,
         "docs_sample_stratified": q_docs_sample_stratified,
         "docs_tfidf_top": q_docs_tfidf_top,
-        "events_user_hll": q_events_user_hll,
-        "events_value_outliers": q_events_value_outliers,
-        "events_rolling_avg": q_events_rolling_avg,
-        "events_top3_per_user": q_events_top3_per_user,
-        "events_value_quantiles": q_events_value_quantiles,
         "docs_exact_dedup": q_docs_exact_dedup,
         "docs_token_stats": q_docs_token_stats,
         "docs_quality": q_docs_quality,
@@ -3743,8 +3184,6 @@ def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "docs_minhash_candidates": q_docs_minhash_candidates,
         "docs_minhash_est": q_docs_minhash_est,
         "docs_dedup_clusters": q_docs_dedup_clusters,
-        "events_funnel": q_events_funnel,
-        "events_pivot": q_events_pivot,
         "docs_simhash": q_docs_simhash,
         "docs_simhash_neardup": q_docs_simhash_neardup,
         "emb_knn_lsh": q_emb_knn_lsh,
@@ -4815,40 +4254,6 @@ o AS (
         "sp_counts_copurchase": _sp_counts_sql(4, 0),
         "stress_copurchase": _stress_sql(4, 0),
         "densest_subgraph": _densest_sql(8),
-        "events_rfm": (
-            "WITH pu AS (SELECT user_id, "
-            "CAST(((SELECT max(epoch_us(ts)) FROM events) - "
-            "max(epoch_us(ts))) // 86400000000 AS BIGINT) AS recency_days, "
-            "CAST(count(*) AS BIGINT) AS frequency, "
-            "CAST(sum(CASE WHEN event_type = 'purchase' THEN "
-            "CAST(floor(value * 100 + 0.5) AS BIGINT) ELSE 0 END) AS BIGINT) "
-            "AS monetary_cents FROM events GROUP BY 1), "
-            "th AS (SELECT list_sort(list(recency_days)) AS ra, "
-            "list_sort(list(frequency)) AS fa, "
-            "list_sort(list(monetary_cents)) AS ma, "
-            "CAST(count(*) AS BIGINT) AS n FROM pu), "
-            "thx AS (SELECT "
-            "ra[CAST(1 + (n - 1) // 4 AS INT)] AS raq1, "
-            "ra[CAST(1 + (2 * (n - 1)) // 4 AS INT)] AS raq2, "
-            "ra[CAST(1 + (3 * (n - 1)) // 4 AS INT)] AS raq3, "
-            "fa[CAST(1 + (n - 1) // 4 AS INT)] AS faq1, "
-            "fa[CAST(1 + (2 * (n - 1)) // 4 AS INT)] AS faq2, "
-            "fa[CAST(1 + (3 * (n - 1)) // 4 AS INT)] AS faq3, "
-            "ma[CAST(1 + (n - 1) // 4 AS INT)] AS maq1, "
-            "ma[CAST(1 + (2 * (n - 1)) // 4 AS INT)] AS maq2, "
-            "ma[CAST(1 + (3 * (n - 1)) // 4 AS INT)] AS maq3 FROM th) "
-            "SELECT user_id, recency_days, frequency, monetary_cents, "
-            "CAST(5 - (CASE WHEN recency_days <= raq1 THEN 1 "
-            "WHEN recency_days <= raq2 THEN 2 "
-            "WHEN recency_days <= raq3 THEN 3 ELSE 4 END) AS BIGINT) AS r, "
-            "CAST(CASE WHEN frequency <= faq1 THEN 1 "
-            "WHEN frequency <= faq2 THEN 2 "
-            "WHEN frequency <= faq3 THEN 3 ELSE 4 END AS BIGINT) AS f, "
-            "CAST(CASE WHEN monetary_cents <= maq1 THEN 1 "
-            "WHEN monetary_cents <= maq2 THEN 2 "
-            "WHEN monetary_cents <= maq3 THEN 3 ELSE 4 END AS BIGINT) AS m "
-            "FROM pu, thx"
-        ),
         "copurchase_rules": (
             "WITH b AS (SELECT DISTINCT l_orderkey AS k, l_partkey AS p "
             "FROM lineitem), "
@@ -5039,30 +4444,6 @@ o AS (
             "LEFT JOIN und e ON e.src = cn.u AND e.dst = cn.w "
             "WHERE e.src IS NULL"
         ),
-        "events_zorder_stats": (
-            "WITH r0 AS (SELECT CAST(user_id AS BIGINT) AS xv, "
-            "CAST(date_diff('day', TIMESTAMP '2024-01-01', ts) AS BIGINT) "
-            "AS yv FROM events), "
-            "r1 AS (SELECT xv, yv, CAST("
-            + _zorder_expr("xv", "yv")
-            + " AS BIGINT) AS zv FROM r0) "
-            "SELECT CAST(zv >> 12 AS BIGINT) AS bucket, "
-            "CAST(count(*) AS BIGINT) AS n_rows, "
-            "min(xv) AS min_user, max(xv) AS max_user, "
-            "min(yv) AS min_day, max(yv) AS max_day "
-            "FROM r1 GROUP BY 1"
-        ),
-        "events_value_iqr": (
-            "WITH c AS (SELECT event_type, "
-            "CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events), "
-            "g AS (SELECT event_type, list_sort(list(cents)) AS a, "
-            "CAST(count(*) AS BIGINT) AS n FROM c GROUP BY 1) "
-            "SELECT event_type, "
-            "CAST(a[CAST(1 + (n - 1) // 4 AS INT)] AS BIGINT) AS p25_cents, "
-            "CAST(a[CAST(1 + (3 * (n - 1)) // 4 AS INT)] AS BIGINT) AS p75_cents, "
-            "CAST(a[CAST(1 + (3 * (n - 1)) // 4 AS INT)] "
-            "- a[CAST(1 + (n - 1) // 4 AS INT)] AS BIGINT) AS iqr_cents FROM g"
-        ),
         "orders_rolling_30d": (
             "SELECT o_orderkey, o_custkey, "
             "CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) "
@@ -5141,7 +4522,7 @@ o AS (
         "lpa_copurchase": _lpa_sql(10),
         # round-10 labels -> exact-integer modularity decomposition:
         # q_num = 2m*intra_sym_c - d_c^2 (DuckDB sum() is HUGEINT ->
-        # CAST to BIGINT, the events_sessions lesson)
+        # CAST to BIGINT to match Spark's long)
         "modularity_lpa": _lpa_sql(
             2,
             tail=(
@@ -5188,17 +4569,6 @@ o AS (
             "round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue, "
             "count(*) AS n_rows FROM lineitem GROUP BY l_returnflag, l_linestatus"
         ),
-        "events_sessions": (
-            "WITH x AS (SELECT user_id, ts, event_id, "
-            "lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS pts "
-            "FROM events) "
-            # CAST: DuckDB integer sum() yields HUGEINT, which pandas
-            # coerces to float64 and the comparator then formats as
-            # "56.000000" vs Spark's bigint "56" — cast keeps it integral.
-            "SELECT user_id, 1 + CAST(sum(CASE WHEN pts IS NULL THEN 0 "
-            "WHEN epoch_us(ts) - epoch_us(pts) > 1800000000 THEN 1 ELSE 0 END) "
-            "AS BIGINT) AS n_sessions FROM x GROUP BY user_id"
-        ),
         "orders_revenue_topn": (
             "SELECT l_orderkey, o_orderdate, o_orderpriority, "
             "CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount) * 100 "
@@ -5223,105 +4593,6 @@ o AS (
             "WHERE c_nationkey = s_nationkey AND r_name = 'ASIA' "
             "GROUP BY 1"
         ),
-        "events_transitions": (
-            "WITH x AS (SELECT event_type AS from_type, "
-            "lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) "
-            "AS to_type FROM events) "
-            "SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n "
-            "FROM x WHERE to_type IS NOT NULL GROUP BY 1, 2"
-        ),
-        "events_cohort_retention": (
-            # DuckDB date_trunc('week') yields DATE; Spark yields
-            # TIMESTAMP — cast so the formatted values agree
-            "WITH c AS (SELECT user_id, "
-            "min(CAST(date_trunc('week', ts) AS TIMESTAMP)) "
-            "AS cohort_week FROM events GROUP BY 1), "
-            "a AS (SELECT DISTINCT user_id, "
-            "CAST(date_trunc('week', ts) AS TIMESTAMP) AS week "
-            "FROM events) "
-            "SELECT cohort_week, "
-            "CAST(date_diff('day', cohort_week, week) // 7 AS BIGINT) "
-            "AS week_offset, "
-            "CAST(count(DISTINCT a.user_id) AS BIGINT) AS n_users "
-            "FROM a JOIN c ON c.user_id = a.user_id GROUP BY 1, 2"
-        ),
-        "events_user_journeys": (
-            "SELECT user_id, "
-            "string_agg(event_type, '>' ORDER BY ts, event_id) AS journey, "
-            "CAST(count(*) AS BIGINT) AS n_events "
-            "FROM events GROUP BY 1"
-        ),
-        "events_props_json": (
-            "SELECT event_type, "
-            "CAST(sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) "
-            "AS sum_k, "
-            "min(CAST(json_extract(props, '$.k') AS BIGINT)) AS min_k, "
-            "max(CAST(json_extract(props, '$.k') AS BIGINT)) AS max_k, "
-            "CAST(count(*) FILTER (WHERE json_extract(props, '$.k') IS NULL) "
-            "AS BIGINT) AS n_null "
-            "FROM events GROUP BY 1"
-        ),
-        "events_stream_attribution": (
-            "SELECT c.user_id, c.event_id AS click_id, "
-            "p.event_id AS purchase_id "
-            "FROM events c JOIN events p ON c.user_id = p.user_id "
-            "AND c.event_type = 'click' AND p.event_type = 'purchase' "
-            "AND c.ts <= p.ts AND c.ts >= p.ts - INTERVAL 30 MINUTE"
-        ),
-        "events_stream_windows": (
-            # streaming append-mode emission = windows fully closed by the
-            # final watermark max(ts) - 2h (see windowed_event_counts)
-            "WITH wm AS (SELECT max(ts) - INTERVAL 2 HOUR AS w FROM events) "
-            "SELECT date_trunc('hour', ts) AS win_start, event_type, "
-            "count(*) AS n_events, "
-            "CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS value_cents "
-            "FROM events GROUP BY 1, 2 "
-            "HAVING date_trunc('hour', ts) + INTERVAL 1 HOUR <= (SELECT w FROM wm)"
-        ),
-        "events_stream_sliding": (
-            # each event's two member windows enumerated closed-form:
-            # the 30-min floor bucket and that minus one slide; emission
-            # = windows fully closed by the settled watermark max(ts)-2h
-            "WITH wm AS (SELECT max(ts) - INTERVAL 2 HOUR AS w FROM events), "
-            "c AS (SELECT make_timestamp((epoch_us(ts) // 1800000000) "
-            "* 1800000000) AS win_start, event_type, value FROM events "
-            "UNION ALL "
-            "SELECT make_timestamp((epoch_us(ts) // 1800000000) "
-            "* 1800000000) - INTERVAL 30 MINUTE, event_type, value "
-            "FROM events) "
-            "SELECT win_start, event_type, count(*) AS n_events, "
-            "CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) "
-            "AS value_cents FROM c GROUP BY 1, 2 "
-            "HAVING win_start + INTERVAL 1 HOUR <= (SELECT w FROM wm)"
-        ),
-        "events_stream_upsert": (
-            # closed form of the foreachBatch fold: latest event per
-            # user by (ts, event_id) + total count
-            "WITH r AS (SELECT user_id, event_id, event_type, "
-            "row_number() OVER (PARTITION BY user_id "
-            "ORDER BY ts DESC, event_id DESC) AS rk, "
-            "count(*) OVER (PARTITION BY user_id) AS n FROM events) "
-            "SELECT user_id, event_id AS last_event_id, "
-            "event_type AS last_type, CAST(n AS BIGINT) AS n_events "
-            "FROM r WHERE rk = 1"
-        ),
-        "events_stream_alarms": (
-            # batch closed form of the GroupState operator: running
-            # per-user cents sum in (ts, event_id) order, one alarm row
-            # per event where cum div 5000 increases
-            "WITH p AS (SELECT user_id, event_id, ts, "
-            "CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events "
-            "WHERE event_type = 'purchase'), "
-            "cum AS (SELECT user_id, event_id, ts, "
-            "CAST(sum(cents) OVER (PARTITION BY user_id ORDER BY ts, event_id "
-            "ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_cents FROM p), "
-            "x AS (SELECT user_id, event_id, cum_cents, "
-            "coalesce(lag(cum_cents) OVER (PARTITION BY user_id "
-            "ORDER BY ts, event_id), 0) AS prev FROM cum) "
-            "SELECT user_id, event_id, cum_cents, "
-            "CAST(cum_cents // 5000 AS BIGINT) AS level FROM x "
-            "WHERE cum_cents // 5000 > prev // 5000"
-        ),
         "clustering_coeff": _LCC_SQL,
         "kcore_suppliers": _kcore_sql(30, 8),
         "coreness_copurchase": _coreness_sql(8),
@@ -5336,15 +4607,6 @@ o AS (
             "JOIN e b ON a.p = b.p AND a.s < b.s GROUP BY 1, 2) "
             "SELECT CAST(COALESCE(sum((x * (x - 1)) // 2), 0) AS BIGINT) "
             "AS n_butterflies FROM co"
-        ),
-        "events_attribution": (
-            "WITH clicks AS (SELECT user_id, ts, max(event_id) AS click_id "
-            "FROM events WHERE event_type = 'click' GROUP BY 1, 2), "
-            "purch AS (SELECT event_id, user_id, ts FROM events "
-            "WHERE event_type = 'purchase') "
-            "SELECT p.event_id, p.user_id, p.ts, c.click_id FROM purch p "
-            "ASOF LEFT JOIN clicks c "
-            "ON p.user_id = c.user_id AND p.ts >= c.ts"
         ),
         "clique4": _CP_SAMPLED
         + (
@@ -5387,19 +4649,6 @@ o AS (
             "SELECT t, CAST(count(*) AS BIGINT) AS cnt FROM ("
             "SELECT unnest(string_split(text, ' ')) AS t FROM documents) "
             "GROUP BY t ORDER BY cnt DESC, t ASC LIMIT 20"
-        ),
-        "events_error_overlap": (
-            "WITH err AS (SELECT user_id AS u, ts AS s, "
-            "ts + INTERVAL 5 MINUTE AS e FROM events "
-            "WHERE event_type = 'error'), "
-            "purch AS (SELECT event_id, user_id, ts FROM events "
-            "WHERE event_type = 'purchase'), "
-            "m AS (SELECT p.event_id, count(*) AS n FROM purch p "
-            "JOIN err ON err.u = p.user_id AND p.ts >= err.s AND p.ts < err.e "
-            "GROUP BY 1) "
-            "SELECT p.event_id, p.user_id, p.ts, "
-            "CAST(COALESCE(m.n, 0) AS BIGINT) AS n_error_windows "
-            "FROM purch p LEFT JOIN m ON m.event_id = p.event_id"
         ),
         "link_prediction": _CP
         + (
@@ -5459,50 +4708,6 @@ o AS (
             "AS BIGINT) % 8 < "
             "CASE lang WHEN 'en' THEN 4 WHEN 'de' THEN 2 ELSE 1 END"
         ),
-        "events_value_outliers": (
-            "WITH c AS (SELECT event_id, event_type, "
-            "CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events), "
-            "s AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n, "
-            "CAST(sum(cents) AS BIGINT) AS s1, "
-            "CAST(sum(cents * cents) AS BIGINT) AS s2 FROM c GROUP BY 1) "
-            "SELECT event_id, c.event_type, cents, "
-            "(cents * n - s1) / sqrt(CAST(n * s2 - s1 * s1 AS DOUBLE)) AS z "
-            "FROM c JOIN s ON s.event_type = c.event_type "
-            "WHERE abs((cents * n - s1) / "
-            "sqrt(CAST(n * s2 - s1 * s1 AS DOUBLE))) > 3"
-        ),
-        "events_rolling_avg": (
-            "WITH c AS (SELECT user_id, event_id, ts, "
-            "CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events) "
-            "SELECT user_id, event_id, cents, "
-            "CAST(sum(cents) OVER w AS DOUBLE) / count(*) OVER w AS avg3 "
-            "FROM c WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id "
-            "ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)"
-        ),
-        "events_user_hll": (
-            "WITH h AS (SELECT md5(CAST(user_id AS VARCHAR)) AS h FROM events), "
-            "p AS (SELECT CAST(('0x' || substring(h, 1, 2)) AS BIGINT) AS bucket, "
-            "substring(h, 3, 13) AS w FROM h), "
-            "r AS (SELECT bucket, CASE WHEN w = '0000000000000' THEN 53 ELSE "
-            "4 * length(regexp_extract(w, '^(0*)', 1)) + (CASE "
-            "WHEN substring(w, length(regexp_extract(w, '^(0*)', 1)) + 1, 1) "
-            "IN ('8','9','a','b','c','d','e','f') THEN 0 "
-            "WHEN substring(w, length(regexp_extract(w, '^(0*)', 1)) + 1, 1) "
-            "IN ('4','5','6','7') THEN 1 "
-            "WHEN substring(w, length(regexp_extract(w, '^(0*)', 1)) + 1, 1) "
-            "IN ('2','3') THEN 2 ELSE 3 END) + 1 END AS rho FROM p), "
-            "regs AS (SELECT bucket, max(rho) AS m_j FROM r GROUP BY 1), "
-            "s AS (SELECT CAST(count(*) AS BIGINT) AS n_buckets, "
-            "CAST(sum(CAST(1 AS BIGINT) << (53 - m_j)) "
-            "+ (256 - count(*)) * (CAST(1 AS BIGINT) << 53) AS BIGINT) "
-            "AS s_scaled FROM regs), "
-            "x AS (SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS n_exact "
-            "FROM events) "
-            "SELECT n_exact, n_buckets, s_scaled, "
-            "CAST(0.7213 AS DOUBLE) / (CAST(1 AS DOUBLE) + CAST(1.079 AS DOUBLE) / "
-            "CAST(256 AS DOUBLE)) * CAST(65536 AS DOUBLE) * "
-            "CAST(9007199254740992 AS DOUBLE) / s_scaled AS estimate FROM x, s"
-        ),
         "docs_tfidf_top": (
             "WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t "
             "FROM documents), "
@@ -5517,20 +4722,6 @@ o AS (
             "CAST(tf * n_docs AS DOUBLE) / df DESC, t ASC) AS rn "
             "FROM tf JOIN df USING (t), n) "
             "SELECT doc_id, t AS token, tf, df, score FROM s WHERE rn = 1"
-        ),
-        "events_top3_per_user": (
-            "SELECT user_id, rn, event_id, value FROM ("
-            "SELECT user_id, event_id, value, row_number() OVER ("
-            "PARTITION BY user_id ORDER BY value DESC, ts ASC, event_id ASC"
-            ") AS rn FROM events) WHERE rn <= 3"
-        ),
-        "events_value_quantiles": (
-            "WITH r AS (SELECT event_type, value, row_number() OVER ("
-            "PARTITION BY event_type ORDER BY value, event_id) AS rn, "
-            "count(*) OVER (PARTITION BY event_type) AS n FROM events), "
-            "qs AS (SELECT unnest(CAST([0.25, 0.5, 0.75, 0.9] AS DOUBLE[])) AS q) "
-            "SELECT event_type, q, value FROM r, qs "
-            "WHERE rn = CAST(ceil(q * n) AS BIGINT)"
         ),
         "lineitem_rollup": (
             "SELECT l_returnflag, l_linestatus, "
@@ -5548,27 +4739,6 @@ o AS (
             "SELECT l_returnflag, l_linestatus, "
             "round(sum(l_quantity), 6) AS sum_qty, count(*) AS n_rows "
             "FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)"
-        ),
-        "events_stream_dedup": (
-            "SELECT DISTINCT user_id, event_type FROM events"
-        ),
-        "events_stream_sessions": (
-            # gaps-and-islands sessionization; >= gap starts a new session
-            # (session_window end bound is exclusive); emitted sessions are
-            # those fully closed by the final watermark max(ts) - 2h
-            "WITH x AS (SELECT user_id, ts, event_id, "
-            "lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS pts "
-            "FROM events), "
-            "s AS (SELECT *, sum(CASE WHEN pts IS NULL OR "
-            "epoch_us(ts) - epoch_us(pts) >= 1800000000 THEN 1 ELSE 0 END) "
-            "OVER (PARTITION BY user_id ORDER BY ts, event_id "
-            "ROWS UNBOUNDED PRECEDING) AS sid FROM x), "
-            "g AS (SELECT user_id, sid, min(ts) AS sess_start, "
-            "max(ts) + INTERVAL 30 MINUTE AS sess_end, "
-            "CAST(count(*) AS BIGINT) AS n_events FROM s GROUP BY user_id, sid), "
-            "wm AS (SELECT max(ts) - INTERVAL 2 HOUR AS w FROM events) "
-            "SELECT sess_start, sess_end, user_id, n_events FROM g "
-            "WHERE sess_end <= (SELECT w FROM wm)"
         ),
         "docs_exact_dedup": (
             "SELECT md5(text) AS text_hash, count(*) AS n_docs, "
@@ -5772,32 +4942,6 @@ o AS (
             "    SELECT v, v FROM verts UNION "
             "    SELECT e.dst AS v, r.m FROM reach r JOIN und e ON e.src = r.v) "
             "  SELECT v, m FROM reach) GROUP BY v"
-        ),
-        "events_pivot": (
-            "SELECT user_id, "
-            "CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS click, "
-            "CAST(count(*) FILTER (event_type = 'error') AS BIGINT) AS error, "
-            "CAST(count(*) FILTER (event_type = 'purchase') AS BIGINT) AS purchase, "
-            "CAST(count(*) FILTER (event_type = 'signup') AS BIGINT) AS signup, "
-            "CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS view "
-            "FROM events GROUP BY user_id"
-        ),
-        "events_funnel": (
-            "WITH v AS (SELECT user_id, min(ts) AS t FROM events "
-            "WHERE event_type = 'view' GROUP BY 1), "
-            "c AS (SELECT e.user_id, min(e.ts) AS t FROM events e "
-            "JOIN v ON v.user_id = e.user_id AND e.ts > v.t "
-            "WHERE e.event_type = 'click' GROUP BY 1), "
-            "p AS (SELECT e.user_id, min(e.ts) AS t FROM events e "
-            "JOIN c ON c.user_id = e.user_id AND e.ts > c.t "
-            "WHERE e.event_type = 'purchase' GROUP BY 1) "
-            "SELECT (SELECT CAST(count(*) AS BIGINT) FROM v) AS n_view, "
-            "(SELECT CAST(count(*) AS BIGINT) FROM c) AS n_view_click, "
-            "(SELECT CAST(count(*) AS BIGINT) FROM p) AS n_view_click_purchase, "
-            "(SELECT CAST(count(*) AS DOUBLE) FROM c) / "
-            "(SELECT CAST(count(*) AS DOUBLE) FROM v) AS cr_click, "
-            "(SELECT CAST(count(*) AS DOUBLE) FROM p) / "
-            "(SELECT CAST(count(*) AS DOUBLE) FROM c) AS cr_purchase"
         ),
         "docs_simhash": _SIMHASH + "SELECT doc_id, simhash FROM sh",
         "docs_simhash_neardup": _SIMHASH

@@ -8,7 +8,7 @@ and nowhere else; operators ask this module and branch on the answer.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 # The broadcast ceiling pair. An input broadcasts while its estimated
 # size is at most BROADCAST_BYTE_LIMIT, or else while it has at most
@@ -127,3 +127,10 @@ def fits_31_bits(max_id: int | None) -> bool:
     ``None`` (unknown range) takes the always-safe wide path. A dense
     dictionary numbered from 0 has ``max_id = n_vertices - 1``."""
     return max_id is not None and max_id < _ID_LIMIT
+
+
+def in_31_bits(id_col: Column) -> Column:
+    """Row-level form of ``fits_31_bits``: true iff the long ``id_col``
+    lies in [0, 2^31). Lets a packed path check every id it packs
+    without a separate pass to find the range."""
+    return (id_col >= 0) & (id_col < _ID_LIMIT)

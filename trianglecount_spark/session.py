@@ -31,7 +31,15 @@ ENGINE_CONFS: dict[str, str] = {
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS`` if set, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def default_driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else a third of the host's RAM,
+    capped at 6g and at least 1g."""
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{max(1, min(6, int(ram_gb // 3)))}g"
 
 
 def get_spark(
@@ -64,7 +72,7 @@ def get_spark(
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(cores))
-        .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_memory or default_driver_memory())
     )
     for k, v in ENGINE_CONFS.items():
         builder = builder.config(k, v)
